@@ -1,19 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.jdk.CollectionConverters._
+
+import graft.Harness.{f3, json, obj}
+
+/** Timed sweep over the whole registry: prints one JSON line (the
+  * headline) as the process's last line and writes the per-query
+  * record to `SPARK_GRAFT_BENCH_FULL`. Usage: runMain graft.Bench */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // scan-parallelism floor: at least one split per core at ANY
-      // scale (no-op on big multi-split scans; locally it keeps all
-      // cores busy on compact single-file tables and cache artifacts)
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_SPLITS", cpus))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = apps.Apps.session("graft-bench")
     // ERROR, not WARN: the driver records only the LAST 2000 chars of
     // this process's combined output, and WindowExec/streaming WARNs
     // printed during the sweep drowned the round-15 JSON line out of
@@ -26,12 +23,12 @@ object Bench {
     // emitted when a late/zombie task completion races the GC of an
     // already-finished query's SQLMetrics (root-caused in DEVNOTES
     // r17: metrics-only, results unaffected, all queries time and
-    // none fail — confirmed by AccumDiag running the full registry
-    // with zero such stacks when frames stay reachable). It is
+    // none fail — a full-registry run that kept every frame reachable
+    // logged zero such stacks). It is
     // GC-timing dependent, so it cannot be deterministically pinned
     // away across 340 queries x 2 passes; filtering exactly this
     // message in Bench ONLY keeps the driver's 2000-char tail
-    // parseable while AccumDiag/Verify keep the channel visible.
+    // parseable while Verify keeps the channel visible.
     // Suppressions are COUNTED and released in the final JSON
     // (`suppressed_accum_logs`): a later change that starts losing
     // genuinely important accumulator updates shows up as a count
@@ -58,10 +55,23 @@ object Bench {
     // 100-TB operating mode: symmetrize the graph once, run the
     // family against the registered artifact)
     plans.ResultCache.installHooks()
+    // One timed attempt; a failure is printed and returns None. A
+    // failed warm-up or prime step names its query in `failed`: its
+    // one-time cost would otherwise move unseen into the timed region.
+    def attempt(name: String): Option[Double] = {
+      val t0 = System.nanoTime()
+      try {
+        SparkEntry.queries(name)(spark, sfDir).count()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        Console.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
+      }
+    }
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     // warmup: absorb one-time session costs (codegen compiler, file
     // index, shuffle infra) so per-query numbers reflect the operators
-    try SparkEntry.queries("q1_agg")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    if (attempt("q1_agg").isEmpty) failed += "q1_agg"
     // Deterministic cache state (round-19, verdict items 3/4): the
     // five queries whose shared-preprocessing build dominates their
     // own cost were BIMODAL across runs — whichever family member ran
@@ -77,10 +87,7 @@ object Bench {
     val primed = Seq("q_graph_louvain_ml", "q_graph_louvain_res",
       "q_graph_pagerank_d", "q_split_leakfree", "q_eval_linkpred")
     val tPrime0 = System.nanoTime()
-    primed.foreach { n =>
-      try SparkEntry.queries(n)(spark, sfDir).count()
-      catch { case _: Throwable => () }
-    }
+    primed.foreach { n => if (attempt(n).isEmpty) failed += n }
     val primeS = (System.nanoTime() - tPrime0) / 1e9
     val missesBeforeTimed = plans.ResultCache.misses
     // min of two INTERLEAVED passes per query: pass 1 over all queries,
@@ -104,32 +111,21 @@ object Bench {
     val timed = (1 to 2).map { pass =>
       val order = if (pass == 2) names.reverse else names
       order.map { name =>
-        val t0 = System.nanoTime()
-        val r =
-          try { SparkEntry.queries(name)(spark, sfDir).count()
-                name -> Some((System.nanoTime() - t0) / 1e9) }
-          catch { case _: Throwable => name -> None }
-        if (r._2.exists(_ > 2.0)) System.gc()
-        r
+        val t = attempt(name)
+        if (t.exists(_ > 2.0)) System.gc()
+        name -> t
       }.toMap
     }
     val wallS = (System.nanoTime() - tWall0) / 1e9
-    // failed = no successful attempt in either pass; a query with one
-    // good pass reports that pass (a flaky second attempt must not put
-    // a query in BOTH the failed list and the totals)
-    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    // a timed failure = no successful attempt in either pass; a query
+    // with one good pass reports that pass (a flaky second attempt
+    // must not put it in BOTH the failed list and the totals)
     val results = names.map { name =>
       val times = timed.flatMap(_(name))
       if (times.isEmpty) failed += name
       name -> (if (times.nonEmpty) times.min else 0.0)
     }.toMap
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Locale.ROOT: a comma-decimal default locale would emit invalid
-    // JSON ("1,234") through f-interpolation
-    def f3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f",
-        Double.box(v))
     // The driver records only the LAST 2000 chars of this process's
     // output (BENCH_r*.json "tail"), and sbt appends a ~90-char
     // "[success] Total time" footer after our line. A full 200-query
@@ -163,27 +159,28 @@ object Bench {
       .flatMap(_.valuesIterator).flatten.sum
     val timedContention =
       if (total > 0) timedSum / (2 * total) else 0.0
-    val samplesJson = results.toSeq.sortBy(_._1).map { case (k, _) =>
-      def g(i: Int): String = timed(i)(k).map(f3).getOrElse("null")
-      "\"" + k + "\":{\"p1\":" + g(0) + ",\"p2\":" + g(1) + "}"
-    }.mkString("{", ",", "}")
-    val fullJson = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{\"metric\":\"total\",\"value\":" + f3(total) +
-        ",\"unit\":\"sec\",\"n_queries\":" + results.size +
-        ",\"wall_s\":" + f3(wallS) +
-        ",\"wall_over_min_sum\":" + f3(contention) +
-        ",\"timed_over_min_sum\":" + f3(timedContention) +
-        ",\"suppressed_accum_logs\":" + suppressedAccumLogs.get() +
-        ",\"cache_prime_s\":" + f3(primeS) +
-        ",\"total_incl_prime\":" + f3(total + primeS) +
-        ",\"cache_primed\":" +
-        primed.map("\"" + _ + "\"").mkString("[", ",", "]") +
-        ",\"cache_misses_timed\":" +
-        (plans.ResultCache.misses - missesBeforeTimed) +
-        ",\"failed\":" + failedJson + ",\"sf\":\"" + sfDir +
-        "\",\"samples\":" + samplesJson +
-        ",\"queries\":{", ",", "}}")
+    val samples = obj(results.keys.toSeq.sorted.map { k =>
+      k -> obj(Seq("p1", "p2").zip(timed).map { case (p, t) =>
+        p -> t(k).map(f3).orNull })
+    })
+    // the fields both records share; `wall_s` is in the sidecar only
+    def head(wall: Boolean): Seq[(String, Any)] =
+      Seq("metric" -> "total", "value" -> f3(total), "unit" -> "sec",
+        "n_queries" -> results.size) ++
+      (if (wall) Seq("wall_s" -> f3(wallS)) else Nil) ++
+      Seq("wall_over_min_sum" -> f3(contention),
+        "timed_over_min_sum" -> f3(timedContention),
+        "suppressed_accum_logs" -> suppressedAccumLogs.get(),
+        "cache_prime_s" -> f3(primeS),
+        "total_incl_prime" -> f3(total + primeS))
+    val failedList = failed.toSeq.asJava
+    val fullJson = json.writeValueAsString(obj(head(wall = true) ++ Seq(
+      "cache_primed" -> primed.asJava,
+      "cache_misses_timed" ->
+        (plans.ResultCache.misses - missesBeforeTimed),
+      "failed" -> failedList, "sf" -> sfDir, "samples" -> samples,
+      "queries" -> obj(results.toSeq.sortBy(_._1).map { case (k, v) =>
+        k -> f3(v) }))))
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
       "/root/repo/BENCH_FULL.json")
     // advertise the sidecar only if THIS run's write succeeded — a
@@ -192,15 +189,19 @@ object Bench {
       try {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(fullPath), fullJson)
-        "\"" + fullPath + "\""
-      } catch { case _: Throwable => "null" }
-    val headline = results.toSeq.sortBy(-_._2).take(40)
-      .map { case (k, v) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
+        fullPath
+      } catch { case e: Throwable =>
+        Console.err.println(s"[bench] $fullPath not written: ${e.getMessage}")
+        null
+      }
+    val headline = obj(head(wall = false) ++ Seq(
+      "queries" -> obj(results.toSeq.sortBy(-_._2).take(40).map {
+        case (k, v) => k -> f3(v) }),
+      "failed" -> failedList, "sf" -> sfDir, "full" -> fullRef))
     spark.stop()
     // total_incl_prime (r19 verdict item 3): the timed total PLUS the
     // untimed cache-prime pool, so round-over-round totals stay
     // comparable even as shared builds move in/out of the prime.
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"wall_over_min_sum":${f3(contention)},"timed_over_min_sum":${f3(timedContention)},"suppressed_accum_logs":${suppressedAccumLogs.get()},"cache_prime_s":${f3(primeS)},"total_incl_prime":${f3(total + primeS)},"queries":$headline,"failed":$failedJson,"sf":"$sfDir","full":$fullRef}""")
+    println(json.writeValueAsString(headline))
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc scale probe (not part of the driver contract): replicate the
@@ -10,13 +9,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = apps.Apps.session("scale-probe")
     val docs = Tables.documents(spark, sfDir)
       .crossJoin(spark.range(20).select(col("id").as("rep")))
       .select((col("doc_id") * 20 + col("rep")).as("doc_id"), col("text"))
@@ -638,8 +631,6 @@ object ScaleProbe {
       "interval sweep at 20x does not equal 20 disjoint base copies")
     println(f"r13 intervalSweep 20x events (${sweep20.getLong(1)} " +
       f"groups): $tSweep%.1fs, per-group results exact")
-
-    ProbeJoins.run(spark, sfDir)
 
     spark.stop()
   }

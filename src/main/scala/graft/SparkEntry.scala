@@ -3067,7 +3067,7 @@ object SparkEntry {
     // engines: pos = p*(n-1), linear interpolation — identical floats)
     // (rank-join exact percentiles, NOT the built-in percentile()
     //  whose buffer ships each group's full value multiset as one
-    //  shuffle record — the ShuffleAudit smell this replaced)
+    //  shuffle record — the `Harness shuffles` smell this replaced)
     "q_percentile" -> ((s, dir) =>
       operators.Quantiles.exactInterpolated(
           Tables.lineitem(s, dir), col("l_returnflag"),

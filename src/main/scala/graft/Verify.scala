@@ -1,52 +1,55 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import scala.jdk.CollectionConverters._
+/** Correctness dump: each SparkEntry.queries result → parquet,
+  * plus oracle_sql.json, for the DuckDB oracle compare (tools/check.py).
+  * Usage: runMain graft.Verify <sfDir> <outDir> [q_name,q_name,...] */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_SPLITS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = apps.Apps.session("graft-verify")
     // materialize shared graph preprocessing once per run: the N
     // queries folding the same base table re-read one artifact
     plans.ResultCache.installHooks()
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-      }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val status = run(spark, sfDir, outDir,
+      SparkEntry.queries.filter { case (name, _) =>
+        only.forall(_.contains(name)) },
+      SparkEntry.oracleSql)
     spark.stop()
+    if (status != 0) sys.exit(status)
+  }
+
+  /** Writes each query's result to `outDir/<name>` as parquet and the
+    * oracle map to `outDir/oracle_sql.json`. A failing query does not
+    * stop the others; the failures are named on stderr at the end.
+    * Returns the process exit status: 0 when every query wrote, else 1. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+          queries: Map[String, (SparkSession, String) => DataFrame],
+          oracleSql: Map[String, String]): Int = {
+    new java.io.File(outDir).mkdirs()
+    val failed = queries.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        Console.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+    }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .writeValueAsString(oracleSql.asJava))
+    if (failed.isEmpty) 0
+    else {
+      Console.err.println(s"[verify] ${failed.size} queries failed: " +
+        failed.sorted.mkString(", "))
+      1
+    }
   }
 }

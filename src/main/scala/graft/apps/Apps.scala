@@ -15,8 +15,13 @@ import org.apache.spark.sql.streaming.Trigger
   * discipline are identical either way.
   */
 object Apps {
+  /** The one session recipe: every app, harness main, benchmark and
+    * spec takes its session here. `local[cpus]` with one shuffle
+    * partition per core, where `cpus` is `SPARK_GRAFT_CPUS` or else
+    * the cores the JVM sees; UTC session time zone, no UI, WARN logs. */
   def session(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(name)

@@ -36,7 +36,7 @@ object PretrainDataPipeline {
     * preprocessing [[kept]] (v1) and [[keptV2Packed]] (v2) share when
     * both run over the same corpus: both route the identically-built
     * frame through this hook, so with the plan-keyed
-    * [[graft.plans.ResultCache]] installed (Bench/Verify/TimeOne — the
+    * [[graft.plans.ResultCache]] installed (Bench/Verify/Harness — the
     * same wiring as Graph/Dedup.preMaterializer) the first composite
     * materializes the survivors once and the second reads the
     * artifact — the 100-TB operating mode, where stage outputs live in
@@ -79,10 +79,10 @@ object PretrainDataPipeline {
     * [[graft.streaming.StreamingDedupTtl.firstSeen]] at the edge —
     * the same normalized-text fingerprint, TTL-bounded RocksDB state
     * (endurance-probed at 100k keys: state 100k → 0 after expiry
-    * with zero input, full re-admission after; see graft.TtlDedupProbe
-    * / DEVNOTES round 14) — then this batch stage provides the global
-    * exact pass over the accumulated corpus, as the operator's
-    * scaladoc prescribes. */
+    * with zero input, full re-admission after; see DEVNOTES round 14,
+    * "StreamingDedupTtl endurance") — then this batch stage provides
+    * the global exact pass over the accumulated corpus, as the
+    * operator's scaladoc prescribes. */
   def afterExactDedup(corpus: DataFrame, cfg: Config): DataFrame =
     corpus.join(droppedByExactDedup(corpus, cfg), Seq("doc_id"), "left_anti")
 
@@ -439,8 +439,8 @@ object PretrainDataPipeline {
     // pinned stages then logs an ERROR-level "attempted to access
     // non-existent accumulator" DAGScheduler stack (benign to
     // results, but it polluted every bench tail since round 11;
-    // AccumDiag attributed all 33 stacks of a full sf0.1 sweep to
-    // exactly this query). The weak-keyed map holds the stage frames
+    // a round-17 diagnosis attributed all 33 stacks of a full sf0.1
+    // sweep to exactly this query). The weak-keyed map holds the stage frames
     // alive until the composed frame itself is collected.
     pinsAlive.put(out, Seq(s1, s2, sh2, s3, s6, s7))
     out

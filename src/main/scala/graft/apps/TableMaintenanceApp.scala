@@ -56,7 +56,7 @@ object TableMaintenanceApp {
 
   def main(args: Array[String]): Unit = {
     val Array(tableDir, statCol, targetRows, outDir) = args.take(4)
-    val spark = graft.GraftSession.builder("table-maintenance").getOrCreate()
+    val spark = Apps.session("table-maintenance")
     try {
       val r = run(spark, tableDir, statCol, targetRows.toLong, outDir)
       println(s"maintenance: files ${r.filesBefore} -> ${r.filesAfter} " +

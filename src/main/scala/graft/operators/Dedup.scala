@@ -31,7 +31,7 @@ object Dedup {
     * parameters. Default: identity (exactly the prior behavior —
     * the operators already persist() internally where one build
     * reuses a frame across plan branches). graft.Verify / Bench /
-    * TimeOne install the plan-keyed ResultCache, so e.g. the
+    * Harness install the plan-keyed ResultCache, so e.g. the
     * Jaccard pair table feeding both q_dedup_jaccard and the
     * dedup→graph communities bridge materializes once per run. */
   @volatile var preMaterializer: DataFrame => DataFrame = identity
@@ -42,7 +42,7 @@ object Dedup {
     * [[Graph.roundMaterializer]]. Default: eager localCheckpoint
     * (the only execution mode that survives at scale — iterative
     * self-joins otherwise compound the plan exponentially). Dry-plan
-    * audits (ExplainOne, PlanDump, PlanGuardSpec) swap in identity so
+    * audits (Harness explain/plans, PlanGuardSpec) swap in identity so
     * the per-round join shapes stay visible in one plan. */
   @volatile var roundMaterializer: DataFrame => DataFrame =
     _.localCheckpoint(true)
@@ -734,7 +734,7 @@ object Dedup {
     * canonical_id) map, and a 100-TB deployment materializes that
     * keep-list once per corpus rather than re-running the star
     * contraction per consumer. Default: just run the build (tests,
-    * streaming). graft.Bench / Verify / TimeOne / JobProbe install a
+    * streaming). graft.Bench / Verify / Harness install a
     * ResultCache.withKeyedCache wrapper keyed on (input-pairs
     * canonical plan, rounds), so the map builds once per run and the
     * family re-reads it — the same disclosed shared-preprocessing

@@ -32,7 +32,7 @@ object Graph {
   /** Materializer for ROUND-CARRIED iteration frames (label tables,
     * frontiers, contracted graphs). Defaults to the eager
     * localCheckpoint lineage cut every fixed-round operator relies
-    * on. [[graft.ExplainOne]] swaps BOTH materializers for identity
+    * on. `graft.Harness explain` swaps BOTH materializers for identity
     * (dry-plan mode), so the full per-round join structure stays in
     * one logical plan and `.explain` / PlanGuard can audit the
     * per-round SMJ/broadcast choices that eager checkpoints
@@ -46,7 +46,7 @@ object Graph {
     * edgeSupport plan is an order of magnitude wider than any other
     * round body (two adjacency self-joins + three-way union), so
     * chaining even two uncut rounds overwhelms the optimizer and the
-    * dry-plan audit used to time out ([[graft.ExplainOne]] r17).
+    * dry-plan audit used to time out (`Harness explain`, r17).
     * Dry mode swaps this for a LAZY localCheckpoint: the plan is cut
     * at a LogicalRDD boundary WITHOUT running a job, each round's
     * plan optimizes separately (linear, not compounding), and the

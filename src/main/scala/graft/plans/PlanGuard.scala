@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
   * programmatic form of the `.explain` discipline PLANS.md documents.
   *
   * Counting is string-based over the executed plan (the same surface
-  * PlanDump and the scale specs read, and the only one that works
+  * `Harness plans` and the scale specs read, and the only one that works
   * uniformly under AQE's adaptive wrapper). `CartesianProduct` is the
   * true scale-killer: it only appears when BOTH join sides are
   * unkeyed and non-broadcast. A `BroadcastNestedLoopJoin` with a

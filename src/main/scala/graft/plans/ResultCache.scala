@@ -31,7 +31,7 @@ object ResultCache {
     // Memoized served frame: a cache HIT used to pay a fresh
     // spark.read.parquet per consumer — driver-side file listing +
     // footer/schema resolution on EVERY hit, ~100-400 ms of pure
-    // planning overhead per consuming query (r19 JobProbe: the
+    // planning overhead per consuming query (r19 per-job profile: the
     // inter-job gaps of the iterative operators). The resolved
     // relation is immutable, so serving one DataFrame object is safe;
     // rebuilt only if a different SparkSession asks.
@@ -39,8 +39,6 @@ object ResultCache {
   }
 
   private def serve(spark: SparkSession, entry: Entry): DataFrame = {
-    if (sys.env.contains("SPARK_GRAFT_NO_MEMO"))
-      return spark.read.parquet(entry.path)
     val d = entry.served
     if (d != null && (d.sparkSession eq spark)) d
     else {
@@ -85,8 +83,8 @@ object ResultCache {
           // coalesced build often lands in ONE file with ONE row
           // group, and a one-row-group file is unsplittable — every
           // downstream consumer then scans the artifact on a single
-          // task no matter what `spark.sql.files.minPartitionNum`
-          // asks for (r19 JobProbe: the pretrain stages serialized
+          // task no matter how many cores the session has (r19
+          // per-job profile: the pretrain stages serialized
           // behind 1-task scans). 4 MB row groups keep the artifact
           // splittable at any file count; for a re-read-many internal
           // artifact the small compression loss is the right trade.
@@ -141,12 +139,9 @@ object ResultCache {
     cached(spark, "k:" + key, key, "k", build)
   }
 
-  /** Serve `df` through the cache: on a semantic hit, return a scan of
-    * the materialized result; on a miss, materialize, register, and
-    * return the scan (so hit and miss paths have the same plan shape
-    * downstream). */
-  /** The standard driver-main wiring (Bench/Verify/TimeOne/JobProbe,
-    * ExplainOne materialized mode): route the shared-preprocessing
+  /** The standard driver-main wiring (Bench, Verify, and the
+    * Harness `time`, `jobs` and materialized `explain` subcommands):
+    * route the shared-preprocessing
     * materializers AND the keyed cluster-map materializer through this
     * cache, so one wiring list exists instead of five. */
   def installHooks(): Unit = {
@@ -167,6 +162,10 @@ object ResultCache {
       }
   }
 
+  /** Serve `df` through the cache: on a semantic hit, return a scan of
+    * the materialized result; on a miss, materialize, register, and
+    * return the scan (so hit and miss paths have the same plan shape
+    * downstream). */
   def withCache(spark: SparkSession, df: DataFrame): DataFrame = {
     val canon = df.queryExecution.optimizedPlan.canonicalized
     // The map key carries BOTH the full-structure hashCode and the

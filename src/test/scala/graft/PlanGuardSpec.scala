@@ -35,7 +35,7 @@ class PlanGuardSpec extends SparkSpec {
   // prefix sums bounded by #shards, per-source mixing tables, daily
   // rollups, top-k-limited ranks, per-column stats, sketch buckets,
   // file metadata) — never on corpus-sized rows. Re-derive with
-  // `graft.WindowAudit` when queries change; any NEW unpartitioned
+  // `graft.Harness plans` when queries change; any NEW unpartitioned
   // window must either move to Ranks.globalRowNumber/globalNtile or
   // justify itself here.
   private val boundedWindowWhitelist: Map[String, Int] = Map(

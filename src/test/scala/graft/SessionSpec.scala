@@ -1,6 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.streaming.ErrorChannel
 
@@ -36,5 +41,35 @@ class SessionSpec extends SparkSpec {
     reasons(Some(4L)) shouldBe "bad_type"
     // total conservation: nothing silently dropped
     clean.count() + dead.count() shouldBe df.count()
+  }
+
+  test("Apps.session: one shuffle partition per core, UTC, no split floor") {
+    // TestSpark's session is the one Apps.session builds
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt shouldBe cpus
+    spark.sparkContext.defaultParallelism shouldBe cpus
+    spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key) shouldBe "UTC"
+    spark.conf.getOption(SQLConf.FILES_MIN_PARTITION_NUM.key) shouldBe None
+    spark.sparkContext.uiWebUrl shouldBe None
+  }
+
+  test("Apps.session holds the only session-builder call") {
+    // assembled from pieces so this file does not match itself
+    val call = ("SparkSession" + "\\s*\\.\\s*" + "builder\\b").r
+    val hits = for {
+      root <- Seq("src/main", "src/test")
+      f <- scala.util.Using.resource(Files.walk(Paths.get(root)))(
+        _.iterator.asScala.toList.sorted)
+      if f.toString.endsWith(".scala")
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if call.findFirstIn(line).isDefined
+    } yield (f.toString, i)
+    val apps = "src/main/scala/graft/apps/Apps.scala"
+    hits.map(_._1) shouldBe Seq(apps)
+    val lines = Files.readAllLines(Paths.get(apps)).asScala
+    val start = lines.indexWhere(_.contains("def session(name: String)"))
+    val end = lines.indexWhere(_ == "  }", start)
+    hits.head._2 should (be > start and be < end)
   }
 }

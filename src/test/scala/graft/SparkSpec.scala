@@ -7,15 +7,10 @@ import org.scalatest.matchers.should.Matchers
 /** Shared local session for specs (one per JVM; tests fork once). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // a per-JVM warehouse dir; SparkConf reads `spark.*` properties
+    sys.props("spark.sql.warehouse.dir") =
+      java.nio.file.Files.createTempDirectory("graft-wh").toString
+    val s = graft.apps.Apps.session("graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
