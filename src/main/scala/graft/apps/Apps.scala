@@ -224,7 +224,6 @@ object ChangesetMetadataPipeline {
   * layer name, so one tile file carries every campaign's footprint and
   * each (tile, sequence) commit stays idempotent under replay. */
 object HashtagFootprintPipeline {
-  import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
 
   import graft.functions.sequenceToTimestamp
@@ -262,18 +261,9 @@ object HashtagFootprintPipeline {
         col("event_ts") <= col("created_at") + expr("INTERVAL 25 HOURS"))
       .select(col("sequence"), col("lon"), col("lat"),
         explode(col("hashtags")).as("hashtag"))
-    val q = joined.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pts = batch.withColumn("key",
-          concat(col("sequence").cast("string"), lit(":"), col("hashtag")))
-        val rasters = graft.operators.Tiles.rasterize(
-          pts, "key", "lon", "lat", zoom, cells)
-        graft.sinks.TileSink.writeSequencedRasters(rasters, tileDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    val q = graft.streaming.TileUpdater.startKeyed(joined,
+      concat(col("sequence").cast("string"), lit(":"), col("hashtag")),
+      tileDir, zoom, cells, checkpointDir, trigger)
     // awaitMs <= 0: run until killed (the continuous Streaming* mains)
     if (awaitMs > 0) q.awaitTermination(awaitMs) else q.awaitTermination()
     ()
@@ -291,7 +281,6 @@ object HashtagFootprintPipeline {
   * under replay (same exactly-once discipline as
   * [[HashtagFootprintPipeline]]). */
 object UserFootprintPipeline {
-  import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
 
   def run(spark: SparkSession, diffDir: String, endSequence: Long,
@@ -307,19 +296,10 @@ object UserFootprintPipeline {
       .filter(col("error").isNull && col("lon").isNotNull &&
         col("lat").isNotNull && col("uid").isNotNull)
       .select(col("sequence"), col("uid"), col("lon"), col("lat"))
-    val q = changes.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pts = batch.withColumn("key",
-          concat(col("sequence").cast("string"), lit(":user_"),
-            col("uid").cast("string")))
-        val rasters = graft.operators.Tiles.rasterize(
-          pts, "key", "lon", "lat", zoom, cells)
-        graft.sinks.TileSink.writeSequencedRasters(rasters, tileDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    val q = graft.streaming.TileUpdater.startKeyed(changes,
+      concat(col("sequence").cast("string"), lit(":user_"),
+        col("uid").cast("string")),
+      tileDir, zoom, cells, checkpointDir, trigger)
     // awaitMs <= 0: run until killed (the continuous Streaming* mains)
     if (awaitMs > 0) q.awaitTermination(awaitMs) else q.awaitTermination()
     ()
@@ -339,7 +319,6 @@ object UserFootprintPipeline {
   * lands in one "edits" layer per sequence, the whole-map edit
   * heatmap. */
 object EditTileUpdaterPipeline {
-  import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
 
   def run(spark: SparkSession, diffDir: String, endSequence: Long,
@@ -355,18 +334,9 @@ object EditTileUpdaterPipeline {
       .filter(col("error").isNull && col("lon").isNotNull &&
         col("lat").isNotNull)
       .select(col("sequence"), col("lon"), col("lat"))
-    val q = changes.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pts = batch.withColumn("key",
-          concat(col("sequence").cast("string"), lit(":edits")))
-        val rasters = graft.operators.Tiles.rasterize(
-          pts, "key", "lon", "lat", zoom, cells)
-        graft.sinks.TileSink.writeSequencedRasters(rasters, tileDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    val q = graft.streaming.TileUpdater.startKeyed(changes,
+      concat(col("sequence").cast("string"), lit(":edits")),
+      tileDir, zoom, cells, checkpointDir, trigger)
     // awaitMs <= 0: run until killed (the continuous Streaming* mains)
     if (awaitMs > 0) q.awaitTermination(awaitMs) else q.awaitTermination()
     ()
@@ -400,7 +370,7 @@ object EditTileUpdaterPipeline {
   * generations. The way-tag-propagated form is the batch
   * [[graft.operators.FacetedTiles]] path. */
 object FacetedEditTilePipeline {
-  import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions._
 
   /** Facet-name array for one row's effective tags — null entries
@@ -435,19 +405,10 @@ object FacetedEditTilePipeline {
         explode(facetArray(
           when(col("visible"), col("tags")).otherwise(col("prev_tags")),
           col("version"), col("visible"))).as("facet"))
-    val q = changes.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pts = batch.withColumn("key",
-          concat(col("sequence").cast("string"), lit(":facet_"),
-            col("facet")))
-        val rasters = graft.operators.Tiles.rasterize(
-          pts, "key", "lon", "lat", zoom, cells)
-        graft.sinks.TileSink.writeSequencedRasters(rasters, tileDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    val q = graft.streaming.TileUpdater.startKeyed(changes,
+      concat(col("sequence").cast("string"), lit(":facet_"),
+        col("facet")),
+      tileDir, zoom, cells, checkpointDir, trigger)
     // awaitMs <= 0: run until killed (the continuous Streaming* mains)
     if (awaitMs > 0) q.awaitTermination(awaitMs) else q.awaitTermination()
     ()
@@ -759,18 +720,26 @@ object FacetedTileCreatorApp {
 /** Tile pyramid -> MVT directory (reference EditHistogramTileCreator).
   * Usage: <sfDir> <tileDir> [baseZoom] [sequence] */
 object TilePyramidApp {
+  /** Pyramid of `events` (`event_id`, `event_type`) from `baseZoom` down
+    * to 0, committed as one summed "edits" layer per tile under
+    * `sequence`; returns tiles written. */
+  def run(events: org.apache.spark.sql.DataFrame, tileDir: String,
+          baseZoom: Int, sequence: Long): Long = {
+    import org.apache.spark.sql.functions.col
+    val pts = events
+      .withColumn("lon", graft.functions.synthLon(col("event_id")))
+      .withColumn("lat", graft.functions.synthLat(col("event_id")))
+    val pyr = graft.operators.Tiles.pyramid(
+      pts, "event_type", "lon", "lat", baseZoom, 0, cells = 16)
+    graft.sinks.TileSink.writeRasters(pyr, tileDir, "edits", sequence)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val tileDir = args(1)
     val baseZoom = if (args.length > 2) args(2).toInt else 6
     val sequence = if (args.length > 3) args(3).toLong else 0L
     val spark = Apps.session("tile-pyramid")
-    import org.apache.spark.sql.functions._
-    val pts = graft.Tables.events(spark, sfDir)
-      .withColumn("lon", graft.functions.synthLon(col("event_id")))
-      .withColumn("lat", graft.functions.synthLat(col("event_id")))
-    val pyr = graft.operators.Tiles.pyramid(
-      pts, "event_type", "lon", "lat", baseZoom, 0, cells = 16)
-    val n = graft.sinks.TileSink.writeRasters(pyr, tileDir, "edits", sequence)
+    val n = run(graft.Tables.events(spark, sfDir), tileDir, baseZoom, sequence)
     println(s"wrote $n tiles under $tileDir")
     spark.stop()
   }

@@ -52,13 +52,12 @@ object Tiles {
     spread(cx) | (spread(cy) << 1)
   }
 
-  /** Assign global pixel coordinates at `zoom` with `cells`-per-side
-    * tiles (equirect), then rasterize: one shuffle by tile key, sparse
-    * sum per cell. Input: any DataFrame with key/lon/lat columns. */
-  def rasterize(df: DataFrame, keyCol: String, lonCol: String, latCol: String,
-                zoom: Int, cells: Int): Dataset[Raster] = {
-    val spark = df.sparkSession
-    import spark.implicits._
+  /** `key`, `gx`, `gy`: each point's key and its global pixel
+    * coordinates at `zoom` with `cells`-per-side tiles (equirect,
+    * clamped to the grid). Tile (`gx / cells`, `gy / cells`), cell
+    * (`gy % cells`, `gx % cells`). */
+  def pixels(df: DataFrame, keyCol: String, lonCol: String, latCol: String,
+             zoom: Int, cells: Int): DataFrame = {
     val n = (1L << zoom) * cells
     val gx = least(greatest(
       floor((col(lonCol) + 180.0) / 360.0 * n), lit(0.0)), lit((n - 1).toDouble))
@@ -66,10 +65,19 @@ object Tiles {
     val gy = least(greatest(
       floor((lit(90.0) - col(latCol)) / 180.0 * n), lit(0.0)), lit((n - 1).toDouble))
       .cast(LongType)
+    df.select(col(keyCol).as("key"), gx.as("gx"), gy.as("gy"))
+  }
+
+  /** Rasterize [[pixels]]: one shuffle by tile key, sparse sum per
+    * cell. Input: any DataFrame with key/lon/lat columns. */
+  def rasterize(df: DataFrame, keyCol: String, lonCol: String, latCol: String,
+                zoom: Int, cells: Int): Dataset[Raster] = {
+    val spark = df.sparkSession
+    import spark.implicits._
     // Codegen'd hash aggregate first: map-side combine collapses the
     // point stream to distinct occupied cells before the shuffle; the
     // typed mapGroups then only assembles counted cells into rasters.
-    df.select(col(keyCol).as("key"), gx.as("gx"), gy.as("gy"))
+    pixels(df, keyCol, lonCol, latCol, zoom, cells)
       .groupBy(col("key"), col("gx"), col("gy"))
       .agg(count(lit(1)).cast("int").as("n"))
       .as[(String, Long, Long, Int)]

@@ -36,11 +36,18 @@ class JdbcUpsertStore(url: String) extends UpsertStore with MetadataStore {
 
   import JdbcUpsertStore._
 
+  /** Tables are created once per instance (once per deserialized copy
+    * on an executor), not on every connection. */
+  @transient private lazy val tablesReady: Unit = {
+    val conn = DriverManager.getConnection(url)
+    try ensureTables(conn) finally conn.close()
+  }
+
   private def withConn[T](f: Connection => T): T = {
+    tablesReady
     val conn = DriverManager.getConnection(url)
     try {
       conn.setTransactionIsolation(Connection.TRANSACTION_SERIALIZABLE)
-      ensureTables(conn)
       f(conn)
     } finally conn.close()
   }

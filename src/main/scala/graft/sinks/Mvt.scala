@@ -110,7 +110,9 @@ object Mvt {
 
   private def encodeLayer(layer: Layer): Array[Byte] = {
     val keys = layer.features.flatMap(_.tags.keys).distinct.sorted
-    val vals = layer.features.flatMap(_.tags.values).distinct
+    // values in key order, not Map order: equal layers encode to equal
+    // bytes however their tag maps were built
+    val vals = layer.features.flatMap(_.tags.toSeq.sortBy(_._1).map(_._2)).distinct
     val keyIdx = keys.zipWithIndex.toMap
     val valIdx = vals.zipWithIndex.toMap
     val out = new ByteArrayOutputStream()
@@ -398,14 +400,44 @@ object Mvt {
     * per-TILE, so a sequence carrying several layers (e.g. one footprint
     * layer per hashtag) must land atomically — committing them as
     * separate calls would mark the sequence on the first layer and
-    * silently no-op the rest. */
+    * silently no-op the rest. The one-sequence case of
+    * [[commitTileSequences]]. */
   def commitTileLayers(store: ObjectStore, z: Int, x: Long, y: Long,
                        layerFeatures: Seq[(String, Seq[Feature])],
                        sequence: Long, extent: Int = 4096,
-                       schema: MergeSchema = SumSchema): Boolean = {
+                       schema: MergeSchema = SumSchema): Boolean =
+    commitTileSequences(store, z, x, y, Seq(sequence -> layerFeatures),
+      extent, schema) == 1
+
+  /** Commit several sequences to one tile in ONE read-modify-write: the
+    * tile is read once, each sequence (ascending) passes the
+    * `__sequences__` guard and merges its layers exactly as a
+    * [[commitTileLayers]] call would, and the tile is written once if
+    * any sequence applied. Every step is a pure function of the decoded
+    * layers and [[encode]] is canonical, so the bytes equal those of
+    * per-sequence commits in ascending order. Returns the number of
+    * sequences applied (already-committed ones are skipped). */
+  def commitTileSequences(store: ObjectStore, z: Int, x: Long, y: Long,
+                          bySequence: Seq[(Long, Seq[(String, Seq[Feature])])],
+                          extent: Int = 4096,
+                          schema: MergeSchema = SumSchema): Int = {
     val existing = readTile(store, z, x, y).getOrElse(Seq.empty)
+    val (layers, applied) = bySequence.sortBy(_._1)
+      .foldLeft((existing, 0)) { case ((tile, n), (sequence, layerFeatures)) =>
+        applySequence(tile, sequence, layerFeatures, extent, schema)
+          .fold((tile, n))(next => (next, n + 1))
+      }
+    if (applied > 0) writeTile(store, z, x, y, layers)
+    applied
+  }
+
+  /** One sequence's layers merged into `existing` under the guard, or
+    * None when the tile already records `sequence`. */
+  private def applySequence(existing: Seq[Layer], sequence: Long,
+                            layerFeatures: Seq[(String, Seq[Feature])],
+                            extent: Int, schema: MergeSchema): Option[Seq[Layer]] = {
     val committed = sequencesOf(existing)
-    if (committed.contains(sequence)) return false // already applied
+    if (committed.contains(sequence)) return None // already applied
     val touched = layerFeatures.map(_._1).toSet
     val mergedLayers = layerFeatures.map { case (layer, features) =>
       val existingFeatures =
@@ -419,8 +451,7 @@ object Mvt {
       })
     val others = existing.filterNot(l =>
       touched.contains(l.name) || l.name == SequencesLayerName)
-    writeTile(store, z, x, y, (others ++ mergedLayers) :+ seqLayer)
-    true
+    Some((others ++ mergedLayers) :+ seqLayer)
   }
 
   /** Same-id feature merge for one layer per `schema` (default: MLong

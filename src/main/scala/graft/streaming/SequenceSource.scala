@@ -209,9 +209,12 @@ class SequenceScanBuilder(options: CaseInsensitiveStringMap)
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan = {
+    // the copy holds the map's lower-cased keys: a camel-case put would
+    // add a second spelling, and the rebuilt map keeps whichever one its
+    // HashMap visits last
     val narrowed = new java.util.HashMap[String, String](options)
-    narrowed.put("startSequence", lo.toString)
-    if (hiExplicit || hiNarrowed) narrowed.put("endSequence", hi.toString)
+    narrowed.put("startsequence", lo.toString)
+    if (hiExplicit || hiNarrowed) narrowed.put("endsequence", hi.toString)
     new SequenceScan(new CaseInsensitiveStringMap(narrowed))
   }
 }

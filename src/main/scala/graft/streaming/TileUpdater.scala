@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.Tiles
 import graft.sinks.TileSink
 
 /** Streaming tile updater: per micro-batch, rasterize the batch's
@@ -21,30 +20,38 @@ import graft.sinks.TileSink
   * batch and the store deduplicates — the reference's design, verbatim
   * (SURVEY.md §2.9 exactly-once).
   *
-  * Each micro-batch is ONE pass: rasterization keys carry the sequence
-  * (`<sequence>:<layer>`), so a batch spanning several sequences still
-  * rasterizes and commits in a single job — each (sequence, tile)
-  * commits independently under its own guard, so partial batch replays
-  * converge. (The round-2 version collected the distinct sequence list
-  * and re-filtered the whole batch once per sequence: k sequences =
-  * k+1 passes over the same data.)
+  * Each micro-batch is ONE job with ONE exchange
+  * ([[graft.sinks.TileSink.commitPoints]]): row keys carry the sequence
+  * (`<sequence>:<layer>`), points are shuffled by tile, and each touched
+  * tile gets one read-modify-write however many sequences the batch
+  * spans — each (sequence, tile) still passes its own guard, so partial
+  * batch replays converge. Every streaming tile updater (edit, faceted,
+  * hashtag and user footprints) commits through [[startKeyed]].
   */
 object TileUpdater {
 
-  /** Start the updater over a SequenceSource-schema stream. */
+  /** Start the updater over a SequenceSource-schema stream; every row
+    * lands in `layer`. */
   def start(changes: DataFrame, tileDir: String, layer: String,
             zoom: Int, cells: Int, checkpoint: String,
-            availableNow: Boolean = true): StreamingQuery = {
-    val writer = changes.writeStream
+            availableNow: Boolean = true): StreamingQuery =
+    startKeyed(changes,
+      concat(col("sequence").cast("string"), lit(":"), lit(layer)),
+      tileDir, zoom, cells, checkpoint,
+      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0L))
+
+  /** Start an updater whose `key` column, `<sequence>:<layer>`, picks
+    * each row's layer; rows need `lon` and `lat`. */
+  def startKeyed(changes: DataFrame, key: Column, tileDir: String,
+                 zoom: Int, cells: Int, checkpoint: String,
+                 trigger: Trigger): StreamingQuery =
+    changes.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pts = batch.withColumn("key",
-          concat(col("sequence").cast("string"), lit(":"), lit(layer)))
-        val rasters = Tiles.rasterize(pts, "key", "lon", "lat", zoom, cells)
-        TileSink.writeSequencedRasters(rasters, tileDir)
+        TileSink.commitPoints(batch.withColumn("key", key), "key", "lon",
+          "lat", zoom, cells, tileDir)
         ()
       }
       .option("checkpointLocation", checkpoint)
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
+      .trigger(trigger)
       .start()
-  }
 }

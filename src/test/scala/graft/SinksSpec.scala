@@ -1,9 +1,43 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
-import graft.sinks.{Mvt, TileSink, UpsertSink}
+import scala.jdk.CollectionConverters._
+
+import graft.sinks.{InMemoryObjectStore, Mvt, ObjectStore, TileSink, UpsertSink}
 import graft.sinks.UpsertSink.{StatsRow, InMemoryUpsertStore}
+
+/** Counts `get`/`put` per key across every deserialized copy in this
+  * JVM (Spark tasks get their own copy of the handle). */
+class CountingStore(inner: ObjectStore) extends ObjectStore {
+  private val id = java.util.UUID.randomUUID().toString
+  private def bump(op: String, key: String): Unit = {
+    CountingStore.calls.computeIfAbsent(s"$id|$op|$key",
+      _ => new AtomicInteger()).incrementAndGet(); ()
+  }
+  /** key -> calls of `op` since the last [[reset]]. */
+  def counts(op: String): Map[String, Int] =
+    CountingStore.calls.asScala.toMap.collect {
+      case (k, n) if k.startsWith(s"$id|$op|") =>
+        k.stripPrefix(s"$id|$op|") -> n.get()
+    }
+  def reset(): Unit =
+    CountingStore.calls.keySet().removeIf(_.startsWith(s"$id|"))
+  override def put(key: String, bytes: Array[Byte]): Unit = {
+    bump("put", key); inner.put(key, bytes)
+  }
+  override def get(key: String): Option[Array[Byte]] = {
+    bump("get", key); inner.get(key)
+  }
+  override def list(prefix: String): Seq[String] = inner.list(prefix)
+  override def delete(key: String): Unit = inner.delete(key)
+}
+
+object CountingStore {
+  private val calls = new ConcurrentHashMap[String, AtomicInteger]()
+}
 
 class SinksSpec extends SparkSpec {
   import spark.implicits._
@@ -235,5 +269,145 @@ class SinksSpec extends SparkSpec {
     written should be >= 1L
     val again = TileSink.writeRasters(rasters, dir, "edits", sequence = 1L)
     again shouldBe 0L // all tiles already committed under this sequence
+  }
+
+  /** key -> bytes of every object in `store`. */
+  private def contents(store: ObjectStore): Map[String, Seq[Byte]] =
+    store.list("").map(k => k -> store.get(k).get.toSeq).toMap
+
+  private def feature(id: Long, tags: (String, Mvt.MValue)*): Mvt.Feature =
+    Mvt.Feature(id, 1, Seq(Mvt.MoveTo(Seq((id.toInt, 2)))), tags.toMap)
+
+  test("commitTileSequences: one read-modify-write, bytes equal per-sequence commits") {
+    // small tag maps keep insertion order, which differs between a
+    // built and a decoded feature: encode must not depend on it
+    def layers(seq: Long): Seq[(String, Seq[Mvt.Feature])] = Seq(
+      "alpha" -> Seq(feature(1L, "z" -> Mvt.MLong(seq * 3),
+        "name" -> Mvt.MString(s"s$seq"), "density" -> Mvt.MLong(seq),
+        "w" -> Mvt.MDouble(0.5))),
+      "beta" -> Seq(feature(seq, "density" -> Mvt.MLong(1L))))
+      .filter(_._1 == "alpha" || seq % 2 == 0)
+    val all = Seq(4L, 1L, 5L, 2L, 3L) // out of order on purpose
+    for {
+      schema <- Seq(Mvt.SumSchema, Mvt.SnapshotSchema)
+      prior <- Seq(Seq.empty[Long], Seq(2L, 5L)) // fresh, partial replay
+    } withClue(s"$schema after $prior: ") {
+      val folded = new CountingStore(new InMemoryObjectStore)
+      val stepped = new InMemoryObjectStore
+      prior.foreach { s =>
+        Mvt.commitTileLayers(folded, 3, 1, 2, layers(s), s, schema = schema)
+        Mvt.commitTileLayers(stepped, 3, 1, 2, layers(s), s, schema = schema)
+      }
+      folded.reset()
+      Mvt.commitTileSequences(folded, 3, 1, 2, all.map(s => s -> layers(s)),
+        schema = schema) shouldBe all.size - prior.size
+      val applied = all.sorted.count(s =>
+        Mvt.commitTileLayers(stepped, 3, 1, 2, layers(s), s, schema = schema))
+      applied shouldBe all.size - prior.size
+      folded.counts("get") shouldBe Map(Mvt.tileKey(3, 1, 2) -> 1)
+      folded.counts("put") shouldBe Map(Mvt.tileKey(3, 1, 2) -> 1)
+      contents(folded) shouldBe contents(stepped)
+      // nothing left to apply: one read, no write
+      folded.reset()
+      Mvt.commitTileSequences(folded, 3, 1, 2, all.map(s => s -> layers(s)),
+        schema = schema) shouldBe 0
+      folded.counts("get") shouldBe Map(Mvt.tileKey(3, 1, 2) -> 1)
+      folded.counts("put") shouldBe Map.empty
+    }
+  }
+
+  /** Points over 3 tiles at zoom 2 / 4 cells, sequences 1-4, layers
+    * a/b: some (tile, sequence) pairs carry both layers. */
+  private val spanningPoints = for {
+    seq <- 1L to 4L
+    (lon, lat) <- Seq((10.0, 20.0), (12.0, 21.0), (-60.0, -30.0),
+      (100.0, 40.0), (10.5, 20.5))
+    layer <- if ((seq + lon.toLong) % 3 == 0) Seq("a", "b") else Seq("a")
+  } yield (s"$seq:$layer", lon + seq * 0.7, lat)
+
+  /** The reference path: rasterize, then one commitTileLayers per
+    * (tile, sequence) in ascending sequence order. */
+  private def commitStepwise(store: ObjectStore,
+                             pts: Seq[(String, Double, Double)]): Int = {
+    val rasters = graft.operators.Tiles.rasterize(
+      pts.toDF("key", "lon", "lat"), "key", "lon", "lat", zoom = 2, cells = 4)
+      .collect().toSeq
+    rasters.groupBy(r => (r.zoom, r.x, r.y)).toSeq.map { case ((z, x, y), rs) =>
+      rs.map(r => (r.key.split(":")(0).toLong, r.key.split(":")(1), r))
+        .groupBy(_._1).toSeq.sortBy(_._1).count { case (seq, group) =>
+          val layers = group.sortBy(_._2).map { case (_, layer, r) =>
+            layer -> r.values.toSeq.sortBy(_._1).map { case (cell, v) =>
+              Mvt.Feature(cell + 1, 1, Seq(Mvt.MoveTo(Seq((
+                (cell % r.cells * (4096 / r.cells)).toInt,
+                (cell / r.cells * (4096 / r.cells)).toInt)))),
+                Map("density" -> Mvt.MLong(v.toLong)))
+            }
+          }
+          Mvt.commitTileLayers(store, z, x, y, layers, seq)
+        }
+    }.sum
+  }
+
+  test("commitPoints writes the tiles of rasterize + per-sequence commits") {
+    val pts = spanningPoints
+    // fresh stores, then stores that already hold sequences 1 and 3
+    Seq(Seq.empty[Long], Seq(1L, 3L)).foreach { done =>
+      val viaPoints = new InMemoryObjectStore
+      val stepwise = new InMemoryObjectStore
+      val before = pts.filter(p => done.contains(p._1.takeWhile(_ != ':').toLong))
+      commitStepwise(viaPoints, before)
+      commitStepwise(stepwise, before)
+      val applied = TileSink.commitPoints(pts.toDF("key", "lon", "lat"),
+        "key", "lon", "lat", zoom = 2, cells = 4, viaPoints)
+      applied shouldBe commitStepwise(stepwise, pts).toLong
+      applied should be > 0L
+      contents(viaPoints) shouldBe contents(stepwise)
+      contents(viaPoints).keySet.size shouldBe 3
+      // a replay of the whole batch is a no-op
+      TileSink.commitPoints(pts.toDF("key", "lon", "lat"),
+        "key", "lon", "lat", zoom = 2, cells = 4, viaPoints) shouldBe 0L
+      contents(viaPoints) shouldBe contents(stepwise)
+    }
+  }
+
+  test("commitPoints: at most one get and one put per touched tile") {
+    val store = new CountingStore(new InMemoryObjectStore)
+    val df = spanningPoints.toDF("key", "lon", "lat")
+    TileSink.commitPoints(df, "key", "lon", "lat", 2, 4, store) shouldBe
+      commitStepwise(new InMemoryObjectStore, spanningPoints).toLong
+    val touched = store.list("").toSet
+    touched.size shouldBe 3
+    store.counts("get") shouldBe touched.map(_ -> 1).toMap
+    store.counts("put") shouldBe touched.map(_ -> 1).toMap
+    store.reset()
+    TileSink.commitPoints(df, "key", "lon", "lat", 2, 4, store) shouldBe 0L
+    store.counts("get") shouldBe touched.map(_ -> 1).toMap
+    store.counts("put") shouldBe Map.empty
+  }
+
+  test("TilePyramidApp: every zoom sums to the event count, runs are byte-identical") {
+    // five event types share tiles: one commit per tile must carry all
+    val events = spark.range(0, 2000)
+      .selectExpr("id AS event_id",
+        "element_at(array('view', 'click', 'cart', 'buy', 'share'), " +
+          "CAST(id % 5 AS INT) + 1) AS event_type")
+    def run(): (Map[String, Seq[Byte]], Long) = {
+      val dir = Files.createTempDirectory("graft-pyramid").toString
+      val n = graft.apps.TilePyramidApp.run(events, dir, baseZoom = 3,
+        sequence = 7L)
+      (contents(new graft.sinks.LocalFsStore(dir)), n)
+    }
+    val (first, written) = run()
+    written shouldBe first.size.toLong
+    val byZoom = first.keys.toSeq.groupBy(_.takeWhile(_ != '/'))
+    byZoom.keySet shouldBe Set("0", "1", "2", "3")
+    byZoom.foreach { case (_, keys) =>
+      keys.map { k =>
+        Mvt.decode(Mvt.gunzip(first(k).toArray)).filter(_.name == "edits")
+          .flatMap(_.features.flatMap(_.tags.get("density")))
+          .collect { case Mvt.MLong(v) => v }.sum
+      }.sum shouldBe 2000L
+    }
+    run()._1 shouldBe first
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -123,6 +125,28 @@ class WireFormatsSpec extends SparkSpec {
   }
 
   // ------------------------------------------- source + dead letter
+
+  test("SequenceScanBuilder: a pushed sequence range narrows the planned partitions " +
+      "whatever other options are set") {
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import graft.streaming.{SequencePartition, SequenceScanBuilder}
+    val base = Map("startSequence" -> "0", "endSequence" -> "40")
+    val extras = Seq("rowsPerSequence" -> "3", "sequencesPerBatch" -> "2",
+      "format" -> "synthetic", "fetchAttempts" -> "1",
+      "fetchBackoffMs" -> "1", "transport" -> "file", "payloadDir" -> "",
+      "note" -> "x")
+    (0 to extras.size).foreach { n =>
+      val opts = new CaseInsensitiveStringMap((base ++ extras.take(n)).asJava)
+      val b = new SequenceScanBuilder(opts)
+      b.pushFilters(Array(GreaterThanOrEqual("sequence", 12L),
+        LessThan("sequence", 16L)))
+      withClue(s"with ${n} extra options: ") {
+        b.build().toBatch.planInputPartitions()
+          .map(_.asInstanceOf[SequencePartition].seq).toSeq shouldBe (12L to 15L)
+      }
+    }
+  }
 
   test("SequenceSource format=osmchange: batch read parses payload files per sequence") {
     val dir = Files.createTempDirectory("graft-wire").toString
