@@ -11,6 +11,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = apps.Apps.session("graft-bench")
+    // materialize shared graph preprocessing once per run (the
+    // 100-TB operating mode: symmetrize the graph once, run the
+    // family against the registered artifact)
+    plans.ResultCache.installHooks()
     // ERROR, not WARN: the driver records only the LAST 2000 chars of
     // this process's combined output, and WindowExec/streaming WARNs
     // printed during the sweep drowned the round-15 JSON line out of
@@ -51,10 +55,6 @@ object Bench {
       })
       ctx.updateLoggers()
     }
-    // materialize shared graph preprocessing once per run (the
-    // 100-TB operating mode: symmetrize the graph once, run the
-    // family against the registered artifact)
-    plans.ResultCache.installHooks()
     // One timed attempt; a failure is printed and returns None. A
     // failed warm-up or prime step names its query in `failed`: its
     // one-time cost would otherwise move unseen into the timed region.

@@ -8,13 +8,15 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Developer harness over the query registry: one session, one sf dir
-  * and one loop over the named queries (every registry query, sorted,
-  * when none is named). A query that fails is printed and skipped; the
-  * failures are named at the end and the process exits non-zero.
+/** Developer harness over the query registry: one session in the
+  * bench's `cache` materialization mode ([[plans.ResultCache.installHooks]]),
+  * one sf dir and one loop over the named queries (every registry
+  * query, sorted, when none is named). A query that fails is printed
+  * and skipped; the failures are named at the end and the process
+  * exits non-zero.
   *
   *  - `time [--cold] [--out F]`: min of 3 `count()` runs per query
-  *    after a `q1_agg` warm-up, with [[plans.ResultCache]] installed.
+  *    after a `q1_agg` warm-up.
   *    Compare candidates within one session only: a full Bench sweep
   *    deep-JITs the planner and codegen paths first, so sub-300 ms
   *    queries run ~100-150 ms faster there (round 16: q_text_stats
@@ -59,6 +61,7 @@ object Harness {
     val names =
       if (named.nonEmpty) named else SparkEntry.queries.keys.toSeq.sorted
     val spark = apps.Apps.session(s"graft-harness-$cmd")
+    plans.ResultCache.installHooks()
     spark.sparkContext.setLogLevel("ERROR")
     val failed =
       try cmd match {
@@ -106,7 +109,6 @@ object Harness {
 
   private def time(spark: SparkSession, dir: String, names: Seq[String],
                    cold: Boolean, out: Option[String]): Seq[String] = {
-    plans.ResultCache.installHooks()
     SparkEntry.queries("q1_agg")(spark, dir).count() // warm-up
     val (mins, failed) = each(names) { name =>
       val times = (1 to 3).map { _ =>
@@ -128,33 +130,6 @@ object Harness {
     failed
   }
 
-  /** Dry-plan mode: every materializer hook becomes identity, so an
-    * iterative operator keeps its whole per-round join structure in
-    * ONE logical plan and the per-round SMJ/broadcast choices print
-    * instead of hiding behind eager-checkpoint RDD scans. k-truss gets
-    * a LAZY cut instead: its edgeSupport is too wide to chain uncut
-    * (the dry audit timed out in r17), and a lazy localCheckpoint cuts
-    * at a LogicalRDD without running a job, so the plan shows the last
-    * round's shape. Never execute a query in this mode: without the
-    * lineage cuts, iterative plans compound exponentially. */
-  private def setDry(): Unit = {
-    operators.Graph.preMaterializer = identity
-    operators.Graph.roundMaterializer = identity
-    operators.Graph.kTrussRoundMaterializer = _.localCheckpoint(false)
-    operators.Dedup.preMaterializer = identity
-    operators.Dedup.roundMaterializer = identity
-    operators.Dedup.clusterMaterializer = (_, _, build) => build()
-    apps.PretrainDataPipeline.preMaterializer = identity
-  }
-
-  /** The execution shape: the cache hooks plus eager lineage cuts. */
-  private def setMaterialized(): Unit = {
-    plans.ResultCache.installHooks()
-    operators.Graph.roundMaterializer = _.localCheckpoint(true)
-    operators.Graph.kTrussRoundMaterializer = _.localCheckpoint(true)
-    operators.Dedup.roundMaterializer = _.localCheckpoint(true)
-  }
-
   private def auditLine(a: plans.PlanGuard.Audit): String =
     s"[planguard] cartesians=${a.cartesians} " +
       s"nestedLoops=${a.nestedLoops} shuffles=${a.shuffles} " +
@@ -163,12 +138,13 @@ object Harness {
       s"unpartitionedWindows=${a.unpartitionedWindows}"
 
   /** Prints each query's formatted physical plan and PlanGuard audit,
-    * built in dry-plan mode ([[setDry]]) unless `materialized`.
+    * built in `plan` mode (see [[plans.Materialize]]) unless
+    * `materialized`.
     *
     * Queries that EXECUTE during construction (driver-loop trainers
     * such as logistic/OLS/BPE, which collect per round, and keyed
-    * artifacts such as the SGNS model) cannot be made lazy by swapping
-    * hooks, and running them without lineage cuts compounds
+    * artifacts such as the SGNS model) cannot be made lazy by a mode,
+    * and running them without lineage cuts compounds
     * exponentially. The dry build therefore runs under a 90 s
     * deadline; on timeout the in-flight jobs are cancelled and the
     * query is audited again in materialized mode. */
@@ -182,14 +158,14 @@ object Harness {
       plans.PlanGuard.requireNoCartesian(df, name)
     }
     each(names) { name =>
-      if (materialized) { setMaterialized(); audit(name, "") }
+      if (materialized) audit(name, "")
       else {
-        setDry()
+        plans.Materialize.setMode(spark, plans.Materialize.Plan)
         // per-query executor so a timed-out build can be shutdownNow +
         // awaitTermination'd — cancel alone does not guarantee the
         // thread stopped, and an abandoned build still constructing
-        // under the dry hooks would race the materialized re-audit on
-        // shared ResultCache state if the globals were swapped under it
+        // on this session would run under the mode the re-audit
+        // switches to, racing it on the SparkContext and ResultCache
         val exec = Executors.newSingleThreadExecutor { r =>
           val t = new Thread(r); t.setDaemon(true); t
         }
@@ -212,13 +188,13 @@ object Harness {
               throw new IllegalStateException("dry-plan build thread " +
                 "did not terminate within 60 s of cancellation; the " +
                 "materialized re-audit is skipped rather than racing " +
-                "the live thread on shared hook state")
+                "the live thread on the shared session")
             println(s"[dry-plan timeout] $name either executes " +
               "work during construction (driver-loop trainer, " +
               "keyed-cache artifact) or its uncut iterative plan " +
               "overwhelms the optimizer - re-auditing in " +
               "materialized mode")
-            setMaterialized()
+            plans.Materialize.setMode(spark, plans.Materialize.Cache)
             audit(name, " (materialized)")
         }
       }
@@ -227,7 +203,6 @@ object Harness {
 
   private def jobs(spark: SparkSession, dir: String,
                    names: Seq[String]): Seq[String] = {
-    plans.ResultCache.installHooks()
     SparkEntry.queries("q1_agg")(spark, dir).count() // warm-up
     final case class Job(start: Long, site: String, var end: Long = 0L,
                          var stages: Int = 0, var tasks: Int = 0)
@@ -362,13 +337,13 @@ object Harness {
     // exponentially; the per-round join STRATEGY is what this section
     // documents.
     sb.append("\n## Dry-plan audit — iterative family\n\n")
-    sb.append("Materializers swapped for identity; per-round join " +
+    sb.append("Built in `plan` mode (`plans.Materialize`); per-round join " +
       "shapes kept in-plan (no `Scan ExistingRDD` lineage cuts). " +
       "Columns: equi-join nodes in the full un-cut plan, cartesians " +
       "(must be 0), RDD-scan leaks (must be 0).\n\n")
     sb.append("Exception: `q_graph_ktruss` audits under a LAZY " +
       "between-round cut (edgeSupport is too wide to chain uncut — " +
-      "the optimizer times out; see Graph.kTrussRoundMaterializer), " +
+      "the optimizer times out; see plans.Materialize), " +
       "so its row shows the LAST round's join shape and its rdd-scan " +
       "count is the number of in-plan REFERENCES to the cut rounds " +
       "(edgeSupport reads its input edge set many times), " +
@@ -387,7 +362,7 @@ object Harness {
       "q_graph_modularity", "q_graph_modularity_w", "q_graph_anf",
       "q_graph_clustering", "q_graph_triangles", "q_graph_ktruss",
       "q_dedup_cluster", "q_dedup_communities").filter(names.contains)
-    setDry()
+    plans.Materialize.setMode(spark, plans.Materialize.Plan)
     val (_, dryFailed) = each(iterative) { name =>
       val p = plans.PlanGuard.planString(SparkEntry.queries(name)(spark, dir))
       val joins = "SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin".r

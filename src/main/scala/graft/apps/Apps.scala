@@ -132,10 +132,14 @@ object AugDiffStatsPipeline {
         .load()
       val q = stream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          val (stats, dead) = rollup(batch)
-          dead.write.mode("append").parquet(deadDir)
-          graft.sinks.UpsertSink.writeStats(stats, store, maxConnections)
-          ()
+          // two sinks, one source read: without the persist each
+          // action below would fetch and parse every sequence again
+          batch.persist()
+          try {
+            val (stats, dead) = rollup(batch)
+            dead.write.mode("append").parquet(deadDir)
+            graft.sinks.UpsertSink.writeStats(stats, store, maxConnections)
+          } finally batch.unpersist()
         }
         .option("checkpointLocation", checkpointDir)
         .trigger(trigger)

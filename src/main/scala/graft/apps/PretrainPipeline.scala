@@ -9,6 +9,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{Dedup, LanguageModel, Sampling}
 import graft.functions.TextFunctions
+import graft.plans.Materialize
 
 /** LLM-pretraining data-pipeline capstone: the composition every real
   * pretraining run executes, chained from already-oracle-checked
@@ -32,19 +33,11 @@ import graft.functions.TextFunctions
   */
 object PretrainDataPipeline {
 
-  /** Materializer for the STAGE-1 (exact dedup) survivor frame, the
-    * preprocessing [[kept]] (v1) and [[keptV2Packed]] (v2) share when
-    * both run over the same corpus: both route the identically-built
-    * frame through this hook, so with the plan-keyed
-    * [[graft.plans.ResultCache]] installed (Bench/Verify/Harness — the
-    * same wiring as Graph/Dedup.preMaterializer) the first composite
-    * materializes the survivors once and the second reads the
-    * artifact — the 100-TB operating mode, where stage outputs live in
-    * parquet and downstream recipes consume them. Identity by default
-    * so the compositions stay fully lazy for specs/dry plan audits. */
-  @volatile var preMaterializer: DataFrame => DataFrame = identity
-
-  private def preMat(df: DataFrame): DataFrame = preMaterializer(df)
+  /** The STAGE-1 (exact dedup) survivor frame [[kept]] (v1) and
+    * [[keptV2Packed]] (v2) share when both run over the same corpus;
+    * in cache mode the first composite materializes it once and the
+    * second reads the artifact (see [[graft.plans.Materialize]]). */
+  private def preMat(df: DataFrame): DataFrame = Materialize.shared(df)
 
   /** Tuning knobs, defaulted to the values the stage-level oracle
     * queries (q_dedup_minhash/cluster, q_contamination,
@@ -384,7 +377,7 @@ object PretrainDataPipeline {
     // Stage 1 runs on the UN-projected raw corpus so its frame
     // canonicalizes identically to [[kept]]'s stage 1 — that plan-key
     // equality is what lets the two composites share one materialized
-    // survivor set through [[preMaterializer]]. `afterStage1` is the
+    // survivor set through [[preMat]]. `afterStage1` is the
     // seam for synthetic augmentation (the registry's boilerplate
     // header injection) — applied AFTER exact dedup, where it belongs:
     // dedup keys on the source text, not on synthesized scaffolding.

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions._
 import graft.functions.TextFunctions._
+import graft.plans.Materialize
 
 /** Document deduplication at training-data scale: exact (fingerprint),
   * MinHash+LSH, SimHash, and exact n-gram Jaccard verification.
@@ -25,28 +26,11 @@ import graft.functions.TextFunctions._
   */
 object Dedup {
 
-  /** Materializer for SHARED dedup preprocessing frames — the
-    * shingle projection and the verified pair tables that several
-    * registry queries derive from the same corpus with the same
-    * parameters. Default: identity (exactly the prior behavior —
-    * the operators already persist() internally where one build
-    * reuses a frame across plan branches). graft.Verify / Bench /
-    * Harness install the plan-keyed ResultCache, so e.g. the
-    * Jaccard pair table feeding both q_dedup_jaccard and the
-    * dedup→graph communities bridge materializes once per run. */
-  @volatile var preMaterializer: DataFrame => DataFrame = identity
-  private def preMat(df: DataFrame): DataFrame = preMaterializer(df)
-
-  /** Materializer for the per-round lineage cuts of
-    * [[canonicalizeClusters]] — the Dedup twin of
-    * [[Graph.roundMaterializer]]. Default: eager localCheckpoint
-    * (the only execution mode that survives at scale — iterative
-    * self-joins otherwise compound the plan exponentially). Dry-plan
-    * audits (Harness explain/plans, PlanGuardSpec) swap in identity so
-    * the per-round join shapes stay visible in one plan. */
-  @volatile var roundMaterializer: DataFrame => DataFrame =
-    _.localCheckpoint(true)
-  private def roundMat(df: DataFrame): DataFrame = roundMaterializer(df)
+  // shared pair tables and the per-round cuts of
+  // [[canonicalizeClusters]]; the session's mode decides how (see
+  // [[graft.plans.Materialize]])
+  private def preMat(df: DataFrame): DataFrame = Materialize.shared(df)
+  private def roundMat(df: DataFrame): DataFrame = Materialize.round(df)
 
   // ------------------------------------------------------------ exact
 
@@ -430,7 +414,7 @@ object Dedup {
     * compiled UDF pass (the HOF chain costs interpreted lambda dispatch
     * per token and, reused across pipeline stages, dominated the whole
     * operator's runtime). */
-  // NOT routed through preMaterializer: the shingle frame is
+  // NOT routed through preMat: the shingle frame is
   // corpus-sized (big to materialize) yet one UDF pass to recompute
   // — the wrong side of the cache trade, measured 4x slower on the
   // first build. The SMALL, expensive-to-recompute pair tables
@@ -727,25 +711,15 @@ object Dedup {
     * carries a wide safety margin. The round-1 fixpoint variant cost a
     * `count()` action (2 jobs) per iteration and leaked persisted
     * intermediates; this runs a fixed budget with each round's edges
-    * persisted and the previous round's unpersisted. */
-  /** Materializer for the finished CLUSTER MAP — the canonical family
-    * artifact of a dedup pass: the cluster-size histogram, leak-safe
-    * split, and balanced sample all join the SAME (doc_id,
-    * canonical_id) map, and a 100-TB deployment materializes that
-    * keep-list once per corpus rather than re-running the star
-    * contraction per consumer. Default: just run the build (tests,
-    * streaming). graft.Bench / Verify / Harness install a
-    * ResultCache.withKeyedCache wrapper keyed on (input-pairs
-    * canonical plan, rounds), so the map builds once per run and the
-    * family re-reads it — the same disclosed shared-preprocessing
-    * policy as [[preMaterializer]]. */
-  @volatile var clusterMaterializer
-      : (DataFrame, Int, () => DataFrame) => DataFrame =
-    (_, _, build) => build()
-
-  /** `share = false` opts a call site OUT of the installed
-    * materializer: a cluster map with exactly ONE consuming query is
-    * not a shared family artifact, and serving it from the keyed
+    * persisted and the previous round's unpersisted.
+    *
+    * The finished map is the canonical family artifact of a dedup
+    * pass: the cluster-size histogram, leak-safe split and balanced
+    * sample all join the SAME (doc_id, canonical_id) map, so in cache
+    * mode ([[graft.plans.Materialize.clusterMap]]) it builds once per
+    * run and the family re-reads it. `share = false` opts a call site
+    * OUT of that cache: a cluster map with exactly ONE consuming query
+    * is not a shared family artifact, and serving it from the keyed
     * cache would time a read-back of the query's own dominant
     * computation (result memoization, not optimization — r19 verdict
     * item 3 on q_geo_dbscan). Single-consumer maps always rebuild in
@@ -753,8 +727,8 @@ object Dedup {
   def canonicalizeClusters(pairs: DataFrame, rounds: Int = 3,
                            share: Boolean = true): DataFrame =
     if (share)
-      clusterMaterializer(pairs, rounds,
-        () => canonicalizeClustersNow(pairs, rounds))
+      Materialize.clusterMap(pairs, rounds)(
+        canonicalizeClustersNow(pairs, rounds))
     else canonicalizeClustersNow(pairs, rounds)
 
   private def canonicalizeClustersNow(pairs: DataFrame,

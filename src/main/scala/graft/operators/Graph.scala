@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Materialize
+
 /** Relational graph analytics on edge tables. Connected components
   * live in [[Dedup.canonicalizeClusters]] (large-star/small-star);
   * this adds the other fixed-point classic, with the same determinism
@@ -13,50 +15,10 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Materializer for the SHARED preprocessing frames — the
-    * canonicalized/symmetrized edge lists, degree bases, and walk
-    * corpora that several registry queries derive from the same
-    * folded base table. Defaults to an eager localCheckpoint
-    * (per-build, per-JVM). graft.Verify / graft.Bench install
-    * [[graft.plans.ResultCache.withCache]] here, so the N graph
-    * queries sharing a fold re-read ONE materialized artifact
-    * instead of re-shuffling the same symmetrization N times —
-    * exactly what a 100-TB deployment does by materializing the
-    * graph once and running the whole family against it.
-    * Round-carried iteration frames keep plain localCheckpoint:
-    * their plans chain through build-unique RDD scans, so a
-    * plan-keyed cache could never hit on them. */
-  @volatile var preMaterializer: DataFrame => DataFrame =
-    _.localCheckpoint(true)
-
-  /** Materializer for ROUND-CARRIED iteration frames (label tables,
-    * frontiers, contracted graphs). Defaults to the eager
-    * localCheckpoint lineage cut every fixed-round operator relies
-    * on. `graft.Harness explain` swaps BOTH materializers for identity
-    * (dry-plan mode), so the full per-round join structure stays in
-    * one logical plan and `.explain` / PlanGuard can audit the
-    * per-round SMJ/broadcast choices that eager checkpoints
-    * otherwise hide behind RDD scans. NEVER run a query in dry-plan
-    * mode at scale: without the lineage cuts, iterative plans
-    * compound exponentially at execution time. */
-  @volatile var roundMaterializer: DataFrame => DataFrame =
-    _.localCheckpoint(true)
-
-  /** Materializer for [[kTruss]]'s between-round cut ONLY. The
-    * edgeSupport plan is an order of magnitude wider than any other
-    * round body (two adjacency self-joins + three-way union), so
-    * chaining even two uncut rounds overwhelms the optimizer and the
-    * dry-plan audit used to time out (`Harness explain`, r17).
-    * Dry mode swaps this for a LAZY localCheckpoint: the plan is cut
-    * at a LogicalRDD boundary WITHOUT running a job, each round's
-    * plan optimizes separately (linear, not compounding), and the
-    * printed/audited plan shows the representative last-round shape.
-    * Execution paths keep the eager cut, identical to before. */
-  @volatile var kTrussRoundMaterializer: DataFrame => DataFrame =
-    _.localCheckpoint(true)
-
-  private def preMat(df: DataFrame): DataFrame = preMaterializer(df)
-  private def roundMat(df: DataFrame): DataFrame = roundMaterializer(df)
+  // shared preprocessing frames and round-carried frames; the
+  // session's mode decides how (see [[graft.plans.Materialize]])
+  private def preMat(df: DataFrame): DataFrame = Materialize.graphShared(df)
+  private def roundMat(df: DataFrame): DataFrame = Materialize.round(df)
 
   /** Narrowest shuffle-key type for node ids (guide §2.3 "narrower
     * types"): when every id column resolves to an integral type, the
@@ -319,19 +281,17 @@ object Graph {
         greatest(col("u"), col("v")).as("b"))
       .distinct()
       .transform(preMat)
-    // BETWEEN-round cuts go through [[kTrussRoundMaterializer]] (lazy
-    // in dry mode so the optimizer never sees two chained edgeSupport
-    // trees); the FINAL round goes through the plain round hook —
-    // identity in dry mode, so the audited plan keeps the
-    // representative per-round join shape in-plan, and the usual eager
-    // cut at execution, so runtime behavior is unchanged.
+    // BETWEEN-round cuts are lazy in plan mode, so the optimizer never
+    // sees two chained edgeSupport trees; the FINAL round takes the
+    // plain round cut, so the audited plan keeps the representative
+    // per-round join shape in-plan.
     var i = 0
     while (i < rounds) {
       val next = edgeSupport(e)
         .filter(col("sup") >= k - 2)
         .select(col("a"), col("b"))
       e = if (i == rounds - 1) roundMat(next)
-          else kTrussRoundMaterializer(next)
+          else Materialize.kTrussRound(next)
       i += 1
     }
     e
@@ -462,9 +422,8 @@ object Graph {
     // The finished label table is a SHARED family artifact (the
     // modularity report and the Louvain refinement both join it), and
     // with lazy rounds its plan is canonical-stable — route through
-    // the shared-preprocessing materializer so consumers re-read one
-    // materialized map instead of re-propagating per query. Default
-    // hook is the same eager localCheckpoint as before.
+    // the shared-frame cut so consumers re-read one materialized map
+    // instead of re-propagating per query.
     preMat(labels)
   }
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Materialize
+
 /** Skip-gram-with-negative-sampling (SGNS) node-embedding training,
   * run INSIDE the engine — the stage that turns
   * [[Graph.randomWalks]] → [[Graph.skipGramPairs]] co-occurrence
@@ -155,7 +157,7 @@ object Sgns {
     val (tw, bw) = cdfTotals(cdf)
     require(tw >= 1, "sgns: empty pair table")
     val ex = examples(pairs, cdf, tw, bw, negsPerPair, seed)
-      .transform(Graph.roundMaterializer)
+      .transform(Materialize.round)
     val nodes = ex.select(col("center").as("node"))
       .unionAll(ex.select(col("other").as("node")))
       .distinct()
@@ -166,7 +168,7 @@ object Sgns {
             col("node"), lit(k), lit(seed))) % 2001L - 1000L)
             .as(s"u$k")) ++
           (0 until dims).map(k => lit(0L).as(s"v$k"))): _*)
-      .transform(Graph.roundMaterializer)
+      .transform(Materialize.round)
     var r = 0
     while (r < rounds) {
       val mc = model.select(col("node").as("center") +:
@@ -244,7 +246,7 @@ object Sgns {
               coalesce(col(s"v$k") - floor(col(s"h$k").cast("double") /
                 (lit(lrDen.toDouble) * col("nx")) + 0.5).cast("long"),
                 col(s"v$k")).as(s"v$k"))): _*)
-        .transform(Graph.roundMaterializer)
+        .transform(Materialize.round)
       r += 1
     }
     model

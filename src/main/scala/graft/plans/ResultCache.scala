@@ -56,7 +56,7 @@ object ResultCache {
   // ConcurrentHashMap mapping function): one build wins a concurrent
   // race and writes the path exactly once, and a build that nests
   // further cache calls (a keyed model build routing through the
-  // plan-keyed preMaterializer) takes a DIFFERENT key's lock instead
+  // plan-keyed shared-frame cache) takes a DIFFERENT key's lock instead
   // of re-entering the map mid-update — key nesting is a DAG by
   // construction (keyed artifacts build over plan-cached frames,
   // never the reverse), so lock order cannot cycle.
@@ -139,28 +139,13 @@ object ResultCache {
     cached(spark, "k:" + key, key, "k", build)
   }
 
-  /** The standard driver-main wiring (Bench, Verify, and the
-    * Harness `time`, `jobs` and materialized `explain` subcommands):
-    * route the shared-preprocessing
-    * materializers AND the keyed cluster-map materializer through this
-    * cache, so one wiring list exists instead of five. */
-  def installHooks(): Unit = {
-    graft.operators.Graph.preMaterializer =
-      df => withCache(df.sparkSession, df)
-    graft.operators.Dedup.preMaterializer =
-      df => withCache(df.sparkSession, df)
-    graft.apps.PretrainDataPipeline.preMaterializer =
-      df => withCache(df.sparkSession, df)
-    graft.operators.Dedup.clusterMaterializer =
-      (pairs, rounds, build) => {
-        // key = canonical plan of the input pair table + round budget;
-        // hashCode rides along because toString truncates wide field
-        // lists (see withCache)
-        val canon = pairs.queryExecution.optimizedPlan.canonicalized
-        withKeyedCache(pairs.sparkSession,
-          s"cc:$rounds:${canon.hashCode()}:$canon", build())
-      }
-  }
+  /** The standard driver-main wiring (Bench, Verify, Harness,
+    * perfbench), called right after `Apps.session`: puts the active
+    * session in [[Materialize.Cache]] mode, so the shared
+    * preprocessing frames and the cluster map are served through this
+    * cache. */
+  def installHooks(): Unit =
+    Materialize.setMode(SparkSession.active, Materialize.Cache)
 
   /** Serve `df` through the cache: on a semantic hit, return a scan of
     * the materialized result; on a miss, materialize, register, and

@@ -85,7 +85,7 @@ object MetadataUpsert {
   }
 
   /** Streaming sink: reference ForeachWriter lifecycle, batched like
-    * [[UpsertSink.StatsForeachWriter]] (1000 rows/txn, ≤3 attempts via
+    * [[UpsertSink.BatchedWriter]] (1000 rows/txn, ≤3 attempts via
     * the store's own transactionality + BatchedWriter-style retry). */
   class MetadataForeachWriter(store: MetadataStore, batchSize: Int = 1000,
                               maxRetries: Int = 3,

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, ForeachWriter, Row}
-
 import scala.collection.mutable
 
 /** Idempotent changeset-stats upsert — the reference system's core
@@ -111,8 +109,8 @@ object UpsertSink {
     def close(): Unit = InMemoryUpsertStore.evict(id)
   }
 
-  /** Batched, bounded-retry writer core shared by the streaming
-    * ForeachWriter and the batch foreachPartition path. */
+  /** Batched, bounded-retry writer core shared by [[writeBatch]] and
+    * the foreachPartition path of [[writeStats]]. */
   class BatchedWriter(store: UpsertStore, batchSize: Int = 1000,
                       maxRetries: Int = 3) extends Serializable {
     private val buffer = mutable.ArrayBuffer.empty[StatsRow]
@@ -133,19 +131,6 @@ object UpsertSink {
         buffer.clear()
       }
     }
-  }
-
-  /** Streaming sink (reference ForeachWriter lifecycle: open/process/
-    * close per partition per epoch). */
-  class StatsForeachWriter(store: UpsertStore, batchSize: Int = 1000)
-      extends ForeachWriter[StatsRow] {
-    @transient private var writer: BatchedWriter = _
-    override def open(partitionId: Long, epochId: Long): Boolean = {
-      writer = new BatchedWriter(store, batchSize); true
-    }
-    override def process(value: StatsRow): Unit = writer.add(value)
-    override def close(errorOrNull: Throwable): Unit =
-      if (errorOrNull == null) writer.flush()
   }
 
   /** Batch path: foreachPartition with the same writer core. */

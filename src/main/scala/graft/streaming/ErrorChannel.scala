@@ -14,7 +14,10 @@ import org.apache.spark.sql.functions._
   * Works identically on batch and streaming DataFrames: `split` is a
   * pair of filters over one upstream plan, and in streaming each side
   * can feed its own sink (errors typically via foreachBatch into the
-  * same idempotent store family as the stats).
+  * same idempotent store family as the stats). Each sink is its own
+  * action over that plan, so a foreachBatch body persists the batch
+  * before splitting it, or every action reads the source again (see
+  * `AugDiffStatsPipeline.run`).
   */
 object ErrorChannel {
 

@@ -1,8 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 import graft.apps.AugDiffStatsPipeline
 import graft.sinks.JdbcUpsertStore
@@ -81,5 +85,46 @@ class AugDiffPipelineSpec extends SparkSpec {
     store.get(900L).get.counts shouldBe Map("nodes" -> 2L, "ways" -> 1L)
     store.get(901L).get.totalEdits shouldBe 1L
     store.get(902L).get.totalEdits shouldBe 1L
+  }
+
+  test("a stats micro-batch reads its source once for both sinks") {
+    val payloadDir = Files.createTempDirectory("graft-e2e-once").toString
+    Files.writeString(Paths.get(payloadDir, "0.json"), Seq(
+      diffLine("node", 1, 900, 7, "alice"),
+      diffLine("way", 2, 900, 7, "alice"),
+      "{corrupt json").mkString("\n"))
+    Files.writeString(Paths.get(payloadDir, "1.json"),
+      diffLine("node", 3, 901, 8, "bob"))
+    val sourceRows = spark.read.format("graft.streaming.SequenceSource")
+      .option("format", "augdiff").option("payloadDir", payloadDir)
+      .option("startSequence", 0).option("endSequence", 1)
+      .load().count()
+    sourceRows shouldBe 4L
+    // numInputRows is the scan node's output-row count of each batch:
+    // every action that recomputes the batch adds its rows again, a
+    // cached read adds none
+    val inputRows = new AtomicLong()
+    val done = new CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = {
+        inputRows.addAndGet(e.progress.numInputRows); ()
+      }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        done.countDown()
+    }
+    val store = new JdbcUpsertStore(
+      s"jdbc:derby:memory:once${System.nanoTime()};create=true")
+    spark.streams.addListener(listener)
+    try {
+      AugDiffStatsPipeline.run(spark, payloadDir, endSequence = 1,
+        store, "augdiff-once",
+        Files.createTempDirectory("graft-e2e-once-ckpt").toString,
+        Files.createTempDirectory("graft-e2e-once-dead").toString)
+      done.await(30, TimeUnit.SECONDS) shouldBe true
+    } finally spark.streams.removeListener(listener)
+    inputRows.get shouldBe sourceRows
+    store.get(900L).get.totalEdits shouldBe 2L
+    store.get(901L).get.totalEdits shouldBe 1L
   }
 }

@@ -119,11 +119,7 @@ class PlanGuardSpec extends SparkSpec {
 
   test("dry-plan mode exposes per-round join shapes to the audit") {
     import graft.operators.Graph
-    val (savedPre, savedRound) =
-      (Graph.preMaterializer, Graph.roundMaterializer)
-    try {
-      Graph.preMaterializer = identity
-      Graph.roundMaterializer = identity
+    withMaterialize(graft.plans.Materialize.Plan) {
       import spark.implicits._
       val edges = (0 until 100).map(i => (i.toLong % 20, (i * 7) % 20L))
         .toDF("u", "v")
@@ -138,9 +134,6 @@ class PlanGuardSpec extends SparkSpec {
       joins should be >= 3
       p should not include "Scan ExistingRDD"
       PlanGuard.audit(df).cartesians shouldBe 0
-    } finally {
-      Graph.preMaterializer = savedPre
-      Graph.roundMaterializer = savedRound
     }
   }
 }

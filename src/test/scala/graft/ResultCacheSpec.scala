@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.plans.{MvRewrite, ResultCache}
+import graft.plans.{Materialize, MvRewrite, ResultCache}
 
 /** Plan-digest result cache: semantic hits, conservative misses,
   * transparent results. */
@@ -90,7 +90,7 @@ class ResultCacheSpec extends SparkSpec {
       ResultCache.hits shouldBe 3L
     } finally pool.shutdownNow()
     // a keyed build that NESTS a plan-keyed cache call (the sgnsModel
-    // shape: artifact build routes through a preMaterializer) must
+    // shape: artifact build routes through a shared-frame cut) must
     // not re-enter the entries map mid-update — per-key locks, not
     // computeIfAbsent mapping functions
     ResultCache.clear()
@@ -103,20 +103,17 @@ class ResultCacheSpec extends SparkSpec {
     ResultCache.clear()
   }
 
-  test("Graph.preMaterializer routed through the cache: two operators " +
+  test("cache mode serves Graph's shared frames: two operators " +
       "on the same fold share one symmetrization, results unchanged") {
     import spark.implicits._
     import graft.operators.Graph
     val edges = ((0 until 200).map(i => ((i * 7) % 40L, (i * 13 + 5) % 40L)))
       .toDF("u", "v")
-    val saved = Graph.preMaterializer
-    try {
-      // uncached reference results first
-      val lpaRef = Graph.labelPropagation(edges, col("u"), col("v"),
-        rounds = 2).collect().map(_.toSeq).sortBy(_.toString)
-      ResultCache.clear()
-      Graph.preMaterializer =
-        df => ResultCache.withCache(df.sparkSession, df)
+    // uncached reference results first
+    val lpaRef = Graph.labelPropagation(edges, col("u"), col("v"),
+      rounds = 2).collect().map(_.toSeq).sortBy(_.toString)
+    ResultCache.clear()
+    try withMaterialize(Materialize.Cache) {
       val lpaGot = Graph.labelPropagation(edges, col("u"), col("v"),
         rounds = 2).collect().map(_.toSeq).sortBy(_.toString)
       val h0 = ResultCache.hits
@@ -128,13 +125,10 @@ class ResultCacheSpec extends SparkSpec {
       Graph.louvainMove(edges, col("u"), col("v"), ids).count()
       ResultCache.hits should be > h0
       lpaGot shouldBe lpaRef
-    } finally {
-      Graph.preMaterializer = saved
-      ResultCache.clear()
-    }
+    } finally ResultCache.clear()
   }
 
-  test("Dedup.clusterMaterializer routed through the keyed cache: the " +
+  test("cache mode serves Dedup's cluster map from the keyed cache: the " +
       "cluster map builds once per (pairs, rounds), results unchanged") {
     import spark.implicits._
     import graft.operators.Dedup
@@ -142,14 +136,8 @@ class ResultCacheSpec extends SparkSpec {
       .toDF("ia", "ib")
     val ref = Dedup.canonicalizeClusters(pairs)
       .collect().map(_.toSeq).sortBy(_.toString)
-    val saved = Dedup.clusterMaterializer
-    try {
-      ResultCache.clear()
-      Dedup.clusterMaterializer = (p, rounds, build) => {
-        val canon = p.queryExecution.optimizedPlan.canonicalized
-        ResultCache.withKeyedCache(p.sparkSession,
-          s"cc:$rounds:${canon.hashCode()}:$canon", build())
-      }
+    ResultCache.clear()
+    try withMaterialize(Materialize.Cache) {
       val got1 = Dedup.canonicalizeClusters(pairs)
         .collect().map(_.toSeq).sortBy(_.toString)
       val m0 = ResultCache.misses
@@ -163,9 +151,6 @@ class ResultCacheSpec extends SparkSpec {
       ResultCache.misses shouldBe (m0 + 1)
       got1 shouldBe ref
       got2 shouldBe ref
-    } finally {
-      Dedup.clusterMaterializer = saved
-      ResultCache.clear()
-    }
+    } finally ResultCache.clear()
   }
 }

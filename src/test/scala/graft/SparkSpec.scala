@@ -18,4 +18,13 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Runs `body` with `spark` in materialization mode `m`, then puts
+    * the previous mode back. */
+  def withMaterialize[A](m: graft.plans.Materialize.Mode)(body: => A): A = {
+    import graft.plans.Materialize
+    val previous = Materialize.mode(spark)
+    Materialize.setMode(spark, m)
+    try body finally Materialize.setMode(spark, previous)
+  }
 }
